@@ -3,7 +3,7 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the KG
 pipeline itself on a synthetic page corpus, plus a two-parallelism
-scaling probe (local[8] vs local[32] subprocesses) evidencing the
+scaling probe (local[2] vs local[8] subprocesses by default) evidencing the
 north rule's N→4N scaling-efficiency criterion.
 
 Prints ONE JSON line:
@@ -187,8 +187,9 @@ def _steal_jiffies() -> int:
 
 
 def run_scaling(repo: str) -> dict:
-    """Same job (read pages table → extract → mentions → edges), two
-    parallelism levels, N→4N (default local[2] vs local[8]).
+    """Same job (read pages table → ``run_pipeline`` on a fresh
+    catalog, tools/scale_probe.py), two parallelism levels, N→4N
+    (default local[2] vs local[8]).
 
     Each probe is PINNED to exactly N cores (``taskset -c 0-(N-1)``).
     Without pinning, a local[2] JVM on a 32-core box free-rides its GC,
@@ -267,33 +268,22 @@ def run_scaling(repo: str) -> dict:
 def main() -> None:
     repo = os.path.dirname(os.path.abspath(__file__))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from surfactant_spark import queries as q
-    from surfactant_spark.dictionary import alias_edges, compile_dictionary
-    from surfactant_spark.operators.canonicalize import entity_canonical_map
-    from surfactant_spark.operators.extract import extract_pages
-    from surfactant_spark.operators.linking import (
-        aliased_entity_keys,
-        build_edges,
-        build_nodes,
-    )
-    from surfactant_spark.operators.mentions import (
-        CONTENT_DEDUP_THRESHOLD,
-        content_for_detection,
-        detect_mentions,
-    )
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.plans.catalog import SnapshotCatalog
+    from surfactant_spark.plans.pipeline import run_pipeline
+    from surfactant_spark.session import get_spark, host_cores
     from surfactant_spark.sources.pages import synth_pages
-    from surfactant_spark.stats import column_stats, dup_rate
+
+    cores = host_cores()
 
     # shuffle partitions = cores (r6; was 2·cores): at sandbox scale
     # (100k-page pipeline, sf0.1 gates) the extra tasks are pure
     # dispatch overhead — measured A/B same code same data: kg
     # pipeline 18.1 s at 64 vs 11.2 s at 32 (steady state, best-of-3).
     # AQE coalescing does not recover it because the pipeline's
-    # cache() stage boundaries materialize at the configured width.
+    # stage boundaries materialize at the configured width.
     # At cluster scale the 2-3x-cores rule applies and is set per
     # deployment (see session.py) — this is the sandbox sweet spot.
     spark = get_spark(app_name="bench", cores=cores, shuffle_partitions=max(cores, 8))
@@ -308,64 +298,38 @@ def main() -> None:
 
     registry = q.queries()
 
-    # KG pipeline end-to-end (compute + edge/node materialization to noop).
-    # Best-of-2 with per-stage wall times: the r2 driver run measured this
-    # once and caught a steal storm (50.2 s reported vs ~15 s steady-state,
-    # see tools/bisect_kg.py) — single-shot numbers on this host lie, the
-    # same lesson the scaling probe already encodes.
+    # KG pipeline end-to-end: ``run_pipeline`` the way users run it —
+    # catalog snapshots, lineage and the entity map inside the timer —
+    # over a pages table materialized once, untimed, on a fresh catalog
+    # per run.  Best-of-3: the first run carries JIT ramp, and
+    # single-shot numbers on a host with CPU steal lie.
     # Measured BEFORE the query loop (r6): the headline grew to ~90
     # queries × 3 trials, and a JVM that has executed ~300 jobs reads
     # the edges stage ~2x slower (heap/GC pollution — 8.6 s vs 3.7 s in
     # a fresh session, same code, same data).  The flagship number must
     # reflect the pipeline, not the harness's accumulated heap state.
-    compiled = compile_dictionary()
-    emap = entity_canonical_map(
-        spark, sorted({p.entity_key for p in compiled.patterns}), alias_edges()
-    ).cache()
-    emap.count()
+    import shutil
+    import tempfile
+
+    kg_root = tempfile.mkdtemp(prefix="bench_kg_")
+    pages_dir = os.path.join(kg_root, "pages")
+    synth_pages(spark, KG_PAGES, partitions=4 * cores).write.parquet(pages_dir)
     # python-worker warmup: first mapInPandas task per worker pays ~1-2 s
     # of pandas/pyarrow import; don't bill that to the pipeline
     spark.range(4 * cores).repartition(4 * cores).mapInPandas(
         lambda it: it, "id long"
     ).count()
-    # best-of-3 (r6; was 2): the first run carries JIT ramp (~17 s vs
-    # ~11 s steady on the same code) and two runs often both land on
-    # the ramp — the third is where the steady state shows up
     kg_runs = []
-    for _ in range(3):
-        pages = synth_pages(spark, KG_PAGES, partitions=4 * cores)
-        stages = {}
-        t0 = t = time.monotonic()
-        # stage boundaries as compressed columnar cache (see SCALING.md:
-        # row-level localCheckpoint of big text frames measures GC)
-        ext = extract_pages(pages).cache()
-        ext.count()
-        stages["extract"] = round(time.monotonic() - t, 3)
-        t = time.monotonic()
-        # one shared stats probe feeds both the mention pre-dedup path
-        # and the edges-stage mentions_unique decision
-        cstats = column_stats(ext, "content_sha256")
-        mentions = detect_mentions(
-            content_for_detection(ext, stats=cstats), compiled
-        ).cache()
-        mentions.count()
-        stages["mentions"] = round(time.monotonic() - t, 3)
-        t = time.monotonic()
-        edges = build_edges(
-            ext, mentions, emap,
-            mentions_unique=dup_rate(cstats) >= CONTENT_DEDUP_THRESHOLD,
-            entity_map_injective=not any(a != b for a, b in alias_edges()),
-            aliased_keys=aliased_entity_keys(alias_edges()),
+    for i in range(3):
+        t0 = time.monotonic()
+        res = run_pipeline(
+            spark, spark.read.parquet(pages_dir),
+            SnapshotCatalog(os.path.join(kg_root, f"catalog-{i}")),
+            run_id=f"bench-{i}", corpus_fingerprint=f"synth-{KG_PAGES}",
         )
-        edges.write.format("noop").mode("overwrite").save()
-        stages["edges"] = round(time.monotonic() - t, 3)
-        t = time.monotonic()
-        nodes = build_nodes(ext, mentions, emap)
-        nodes.write.format("noop").mode("overwrite").save()
-        stages["nodes"] = round(time.monotonic() - t, 3)
-        kg_runs.append({"sec": round(time.monotonic() - t0, 3), "stages": stages})
-        ext.unpersist()
-        mentions.unpersist()
+        kg_runs.append({"sec": round(time.monotonic() - t0, 3),
+                        "stages": res.stage_seconds})
+    shutil.rmtree(kg_root, ignore_errors=True)
     kg_sec = min(r["sec"] for r in kg_runs)
     kg = {
         "n_pages": KG_PAGES,
@@ -373,7 +337,6 @@ def main() -> None:
         "docs_per_sec": round(KG_PAGES / kg_sec, 1),
         "runs": kg_runs,
     }
-    emap.unpersist()
 
     trials: dict[str, list[float]] = {name: [] for name in HEADLINE}
     for _round in range(TRIALS):

@@ -47,10 +47,10 @@ def main() -> None:
             i += 1
 
     from surfactant_spark import queries as q
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     trials = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))
     spark = get_spark(app_name="bench_extra", cores=cores,
                       shuffle_partitions=max(cores, 8))

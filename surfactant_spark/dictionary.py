@@ -386,21 +386,3 @@ def synth_dictionary_rows(
         if version_rows:
             rows.append((key, "content", rf"lib{base}/({VERSION_PLACEHOLDER})", None))
     return rows
-
-
-def sha256_hex(s: str | bytes) -> str:
-    if isinstance(s, str):
-        s = s.encode("utf-8")
-    return hashlib.sha256(s).hexdigest()
-
-
-def entity_node_id(canonical_member_min_sha: str) -> str:
-    return "e:" + canonical_member_min_sha
-
-
-def page_node_id(content_sha256: str) -> str:
-    return "p:" + content_sha256
-
-
-def host_node_id(host: str) -> str:
-    return "h:" + sha256_hex(host)

@@ -25,7 +25,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..dictionary import CompiledDictionary, compile_dictionary
 from ..schema import MENTIONS_SCHEMA
@@ -299,30 +298,3 @@ def detect_mentions(
     else:
         fn = _detect_batches(compiled, ac_threshold, windowed_confirm)
     return src.mapInPandas(fn, schema=MENTIONS_SCHEMA)
-
-
-def resolve_version_hints(mentions: DataFrame) -> DataFrame:
-    """Per (content, entity): keep the highest-confidence version hint —
-    the reference's confidence-argmax field resolution
-    (surfactant/cmd/generate.py:93-122).  Deterministic tie-break on
-    (confidence desc, version asc, matched_via asc) via ``max_by`` over
-    an ordering struct."""
-    return (
-        mentions.groupBy("content_sha256", "entity_key")
-        .agg(
-            F.max_by(
-                F.struct("version", "matched_via"),
-                F.struct(F.col("confidence"), F.col("version"), F.col("matched_via")),
-            ).alias("best"),
-            F.max("confidence").alias("confidence"),
-            F.min("lang").alias("lang"),
-        )
-        .select(
-            "content_sha256",
-            "entity_key",
-            F.col("best.version").alias("version"),
-            F.col("best.matched_via").alias("matched_via"),
-            "confidence",
-            "lang",
-        )
-    )

@@ -10,7 +10,32 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (single JVM, 32 threads, 128 GiB).
+
+def host_cores() -> int:
+    """Cores for ``local[N]``: ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (its affinity mask, which a ``taskset`` narrows)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM``, else
+    min(16g, MemTotal/4).  In single-JVM local mode the driver heap IS
+    executor memory.  16g was the measured sweet spot on a 128 GiB host
+    (an oversized 48g heap regressed UDF throughput ~4x: GC/allocation
+    pathology), and big intermediates flow through parquet stage
+    boundaries, not the heap.  A quarter of MemTotal leaves room for the
+    Python workers, the page cache and a second JVM (the kill-resume
+    tool runs two): on a 15 GB host a 16g heap got the JVM OOM-killed at
+    7.7 GB RSS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{min(16 * 1024, total_kb // 4 // 1024)}m"
+
+
+# Defaults for the single-JVM sandbox, heap sized from the host.
 # At 100 TB / 1000 executors the same knobs are set by spark-submit conf;
 # shuffle.partitions should then be ~2-3x total cores and is overridden
 # per-deployment, not hardcoded in operators.
@@ -46,12 +71,7 @@ _DEFAULTS = {
     ),
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
-    # single-JVM local mode: driver heap IS executor memory.  16g is
-    # the measured sweet spot on this box — an oversized (48g) heap
-    # regressed UDF throughput ~4x (GC/allocation pathology), and big
-    # intermediates should flow through parquet stage boundaries, not
-    # the heap (localCheckpoint of multi-million-row frames spills).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    "spark.driver.memory": driver_memory(),
 }
 
 
@@ -67,7 +87,7 @@ def get_spark(
     On a cluster the caller would instead spark-submit with a master URL
     and this function only applies SQL configs.
     """
-    cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cores = cores or host_cores()
     builder = SparkSession.builder.appName(app_name).master(f"local[{cores}]")
     conf = dict(_DEFAULTS)
     if shuffle_partitions is not None:
@@ -77,9 +97,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

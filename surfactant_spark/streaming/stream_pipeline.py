@@ -154,9 +154,12 @@ def run_stream_kg_ingest(
     :func:`~surfactant_spark.plans.pipeline.run_pipeline_incremental`
     (first batch boots the base via ``run_pipeline``), so the
     UDF-heavy per-document stages run ONLY on the arriving delta and
-    land as append snapshots, while the corpus-wide graph joins
-    recompute — identical economics to the batch incremental path,
-    driven by file arrival instead of an operator invocation.
+    land as append snapshots, and the graph stages go through the same
+    runner as the batch paths: the entity map is reused while the
+    dictionary is unchanged, nodes and edges recompute over base ∪ delta
+    for each new batch, and a replayed batch recomputes nothing —
+    identical economics to the batch incremental path, driven by file
+    arrival instead of an operator invocation.
 
     Exactly-once: the stream checkpoint makes batch delivery
     exactly-once across restarts, and the catalog's per-stage

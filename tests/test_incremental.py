@@ -3,9 +3,10 @@
 The reference's incremental-SBOM semantics (an existing SBOM plus new
 specimens, surfactant/cmd/generate.py:308-314) at pipeline level:
 ``run_pipeline_incremental`` appends delta-only extract/mention
-snapshots (the Iceberg append-snapshot analog in SnapshotCatalog) and
-recomputes the corpus-wide graph joins — the result must equal
-``run_pipeline`` from scratch on base ∪ delta, row for row.
+snapshots (the Iceberg append-snapshot analog in SnapshotCatalog),
+reuses the entity map while the dictionary is unchanged and recomputes
+the corpus-wide graph joins — the result must equal ``run_pipeline``
+from scratch on base ∪ delta, row for row.
 
 Fixture note (FIXTURES.md): page content depends on the corpus size
 (link targets are mod n_pages), so base and delta are ROW-SUBSETS of
@@ -61,6 +62,7 @@ def test_incremental_equals_scratch(spark, corpus, tmp_path):
         spark, full, scratch_cat, corpus_fingerprint="full-600"
     )
     run_pipeline(spark, base, inc_cat, corpus_fingerprint="base-600")
+    emap_snapshot = inc_cat.snapshot_info("entity_map")["snapshot"]
     inc = run_pipeline_incremental(
         spark, delta, inc_cat, delta_fingerprint="delta-600"
     )
@@ -70,6 +72,11 @@ def test_incremental_equals_scratch(spark, corpus, tmp_path):
     assert inc.stages_run == [
         "extract_delta", "mentions_delta", "nodes", "edges"
     ]
+    # the dictionary did not change: the fold reuses the committed
+    # entity map instead of rebuilding it
+    assert inc.stages_skipped == ["entity_map"]
+    assert inc_cat.snapshot_info("entity_map")["snapshot"] == emap_snapshot
+    assert set(inc.stage_seconds) == set(inc.stages_run)
 
     # the per-document tables were APPENDED, not rewritten: two
     # committed data paths, both surviving snapshot expiry
@@ -125,17 +132,22 @@ def test_incremental_chains(spark, corpus, tmp_path):
 def test_incremental_replay_idempotent(spark, corpus, tmp_path):
     """foreachBatch delivery is at-least-once: replaying the SAME delta
     (same delta_fingerprint) must not double-append corpus rows.  The
-    catalog's applied-delta ledger skips both appends; graph joins
-    recompute to identical outputs."""
+    catalog's applied-delta ledger skips both appends, and the graph
+    stages resume from their snapshots: a replay recomputes nothing."""
     _full, base, delta = corpus
     cat = SnapshotCatalog(str(tmp_path / "replay"))
     run_pipeline(spark, base, cat, corpus_fingerprint="base")
     first = run_pipeline_incremental(spark, delta, cat, delta_fingerprint="d1")
     n_ext = cat.read(spark, "extracted").count()
     n_ment = cat.read(spark, "mentions").count()
+    snapshots = {t: cat.snapshot_info(t)["snapshot"] for t in ("nodes", "edges")}
 
     replay = run_pipeline_incremental(spark, delta, cat, delta_fingerprint="d1")
-    assert replay.stages_skipped == ["extract_delta", "mentions_delta"]
+    assert replay.stages_run == []
+    assert replay.stages_skipped == [
+        "extract_delta", "mentions_delta", "entity_map", "nodes", "edges"
+    ]
+    assert {t: cat.snapshot_info(t)["snapshot"] for t in ("nodes", "edges")} == snapshots
     assert cat.read(spark, "extracted").count() == n_ext
     assert cat.read(spark, "mentions").count() == n_ment
     assert len(cat.snapshot_info("extracted")["paths"]) == 2
@@ -169,7 +181,7 @@ def test_incremental_crash_between_appends(spark, corpus, tmp_path):
     assert "dx" not in cat.applied_deltas("mentions")
 
     inc = run_pipeline_incremental(spark, delta, cat, delta_fingerprint="dx")
-    assert inc.stages_skipped == ["extract_delta"]
+    assert inc.stages_skipped == ["extract_delta", "entity_map"]
     assert "mentions_delta" in inc.stages_run
     assert len(cat.snapshot_info("extracted")["paths"]) == 2
 

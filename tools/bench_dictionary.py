@@ -33,15 +33,15 @@ N_BIG = int(os.environ.get("SPARK_GRAFT_DICT_ENTITIES", "10000"))
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import functions as F
 
     from surfactant_spark.dictionary import compile_dictionary, synth_dictionary_rows
     from surfactant_spark.operators.mentions import detect_mentions
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
     from surfactant_spark.sources.pages import synth_pages
 
+    cores = host_cores()
     spark = get_spark(app_name="bench_dictionary", cores=cores,
                       shuffle_partitions=max(2 * cores, 8))
     spark.range(4 * cores).repartition(4 * cores).mapInPandas(

@@ -50,10 +50,10 @@ def main() -> None:
     from surfactant_spark.dictionary import compile_dictionary
     from surfactant_spark.operators.extract import extract_pages
     from surfactant_spark.operators.mentions import detect_mentions
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
     from surfactant_spark.sources.pages import synth_pages
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    cores = host_cores()
     spark = get_spark(app_name="bench_mentions", cores=cores,
                       shuffle_partitions=max(2 * cores, 8))
 

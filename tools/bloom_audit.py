@@ -5,8 +5,7 @@ set is too big to broadcast, so the plain semi-join is a SHUFFLE join
 that moves the ENTIRE probe table.  With the Bloom predicate applied
 inside the scan stage, only matching rows plus the false-positive rate
 reach the exchange.  Wall time at sandbox scale is steal-noise; BYTES
-SHUFFLED is what predicts cluster behavior (same methodology as
-tools/shuffle_audit.py).
+SHUFFLED is what predicts cluster behavior.
 
 Both variants run with the broadcast threshold DISABLED so the exact
 semi-join plans as a shuffle join, and both produce identical results
@@ -44,13 +43,13 @@ def main() -> None:
     n_big = int(sys.argv[1]) if len(sys.argv) > 1 else 5_000_000
     n_keys = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
     m_bits = 1 << 16
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import functions as F
 
     from surfactant_spark.operators.skew import bloom_predicate
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
+    cores = host_cores()
     spark = get_spark(
         app_name="bloom_audit", cores=cores,
         shuffle_partitions=max(2 * cores, 8),

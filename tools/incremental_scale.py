@@ -24,14 +24,14 @@ from surfactant_spark.plans.pipeline import (  # noqa: E402
     run_pipeline,
     run_pipeline_incremental,
 )
-from surfactant_spark.session import get_spark  # noqa: E402
+from surfactant_spark.session import get_spark, host_cores  # noqa: E402
 
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     from tools.run_full_scale import ensure_corpus
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     spark = get_spark(app_name="inc-scale", cores=cores,
                       shuffle_partitions=2 * cores)
     pages_dir = ensure_corpus(spark, n_pages)

@@ -102,9 +102,9 @@ def run_once(spark, n_pages: int, catalog_dir: str, run_id: str) -> dict:
 
 
 def cmd_child(n_pages: int, catalog_dir: str) -> None:
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     spark = get_spark(app_name="full_scale", cores=cores,
                       shuffle_partitions=max(2 * cores, 8))
     print(json.dumps(run_once(spark, n_pages, catalog_dir, "full-scale")), flush=True)
@@ -117,6 +117,9 @@ def _spawn_child(n_pages: int, catalog_dir: str) -> subprocess.Popen:
         [sys.executable, os.path.abspath(__file__), "child", str(n_pages), catalog_dir],
         env=dict(os.environ, PYTHONPATH=repo),
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+        # own process group: the kill takes the child's JVM and Python
+        # workers down with it instead of orphaning them
+        start_new_session=True,
     )
 
 
@@ -132,14 +135,14 @@ def _committed(catalog_dir: str) -> set[str]:
 
 
 def cmd_kill_resume(n_pages: int) -> None:
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
     base = f"/tmp/spark_graft_fullscale_{n_pages}"
     kill_cat, clean_cat = f"{base}/kill_catalog", f"{base}/clean_catalog"
     for d in (kill_cat, clean_cat):
         shutil.rmtree(d, ignore_errors=True)
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     spark = get_spark(app_name="full_scale_driver", cores=cores,
                       shuffle_partitions=max(2 * cores, 8))
     ensure_corpus(spark, n_pages)
@@ -151,7 +154,7 @@ def cmd_kill_resume(n_pages: int) -> None:
         committed = _committed(kill_cat)
         if {"extracted", "mentions"} <= committed:
             killed_after = committed
-            os.kill(child.pid, signal.SIGKILL)
+            os.killpg(child.pid, signal.SIGKILL)
             break
         if child.poll() is not None:
             raise SystemExit("child finished before the kill window — corpus too small")
@@ -184,9 +187,9 @@ def cmd_kill_resume(n_pages: int) -> None:
 
 
 def cmd_sweep(n_pages: int) -> None:
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     spark = get_spark(app_name="full_scale_sweep", cores=cores,
                       shuffle_partitions=max(2 * cores, 8))
     # python-worker warmup (first mapInPandas task pays pandas import)

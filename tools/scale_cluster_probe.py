@@ -18,18 +18,18 @@ the faithful emulation of adding executors — with real task
 serialization, off-heap shuffle transfers between processes, and one
 Python-worker pool per executor.
 
-The job is the production shape shared with tools/scale_probe.py:
-read pages parquet → extract (Arrow UDF) → mention detection →
-edge resolution → noop sink.  Generation, dictionary broadcast and
-table-stats probes are untimed scaffolding (ANALYZE TABLE amortizes
-across runs in production).
+The job is the one tools/scale_probe.py times: read pages parquet →
+``run_pipeline`` on a fresh snapshot catalog.  Corpus generation and
+warm-up are untimed scaffolding.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -56,18 +56,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from surfactant_spark.dictionary import alias_edges, compile_dictionary
-    from surfactant_spark.operators.canonicalize import entity_canonical_map
     from surfactant_spark.operators.extract import extract_pages
-    from surfactant_spark.operators.linking import build_edges
-    from surfactant_spark.operators.mentions import (
-        CONTENT_DEDUP_THRESHOLD,
-        detect_mentions,
-        unique_content,
-    )
+    from surfactant_spark.plans.catalog import SnapshotCatalog
+    from surfactant_spark.plans.pipeline import run_pipeline
     from surfactant_spark.session import _DEFAULTS
     from surfactant_spark.sources.pages import synth_pages
-    from surfactant_spark.stats import column_stats, dup_rate
 
     # executor JVMs spawn their OWN Python workers, which do not inherit
     # the driver's sys.path — ship the package exactly the way a real
@@ -101,39 +94,13 @@ def main() -> None:
     ).save()
     pages.write.format("noop").mode("overwrite").save()
 
-    compiled = compile_dictionary()
-    emap = entity_canonical_map(
-        spark, sorted({p.entity_key for p in compiled.patterns}), alias_edges()
-    ).cache()
-    emap.count()
-
-    from pyspark.sql import functions as F
-
-    from surfactant_spark.operators.skew import find_hot_keys
-
-    ext0 = extract_pages(pages).cache()
-    dedup_first = (
-        dup_rate(column_stats(ext0, "content_sha256")) >= CONTENT_DEDUP_THRESHOLD
-    )
-    links_flat = ext0.select(F.explode("links").alias("url"))
-    hot_keys = find_hot_keys(links_flat, "url")
-    ext0.unpersist()
-
     def one_run() -> float:
+        cat = tempfile.mkdtemp(prefix="scale_lc_catalog_")
         t0 = time.monotonic()
-        ext = extract_pages(pages).cache()
-        ext.count()
-        content = unique_content(ext) if dedup_first else ext.select(
-            "content_sha256", "lang", "text"
-        )
-        mentions = detect_mentions(content, compiled)
-        edges = build_edges(
-            ext, mentions, emap, hot_link_keys=hot_keys,
-            mentions_unique=dedup_first,
-        )
-        edges.write.format("noop").mode("overwrite").save()
+        run_pipeline(spark, pages, SnapshotCatalog(cat),
+                     run_id=f"scale-lc-{n_exec}x{cores_per}", corpus_fingerprint=pages_dir)
         sec = time.monotonic() - t0
-        ext.unpersist()
+        shutil.rmtree(cat, ignore_errors=True)
         return sec
 
     # JIT steady state: ≥3 runs, stop after TWO consecutive

@@ -1,23 +1,26 @@
-"""One scaling-probe run: the production KG job at a given core count.
+"""One scaling-probe run: ``run_pipeline`` at a given core count.
 
 Invoked as a subprocess by bench.py (a JVM can't change master mid-run):
     SPARK_GRAFT_CPUS=8 python tools/scale_probe.py 2000000 /tmp/pages
 Prints one JSON line {"cores": N, "n_pages": N, "sec": s, "docs_per_sec": d}.
 
-The timed job is the production shape: read the pages table (parquet,
-OS-page-cache-hot — the stand-in for a distributed FS) → extract
-(Arrow UDF) → mention detection → edge resolution → sink.  Corpus
-generation is scaffolding and happens once, untimed, shared across
-parallelism levels.  The same job at two levels is the sandbox
-evidence for the north rule's N→4N executor scaling criterion
-(BASELINE.md); tools/hw_envelope.py measures the box's own ceiling.
+The timed job is the pipeline users run: read the pages table (parquet,
+OS-page-cache-hot — the stand-in for a distributed FS) → ``run_pipeline``
+on a fresh snapshot catalog (extract, mentions, entity map, nodes and
+edges, each committed with lineage).  Corpus generation is scaffolding
+and happens once, untimed, shared across parallelism levels.  The same
+job at two levels is the sandbox evidence for the north rule's N→4N
+executor scaling criterion (BASELINE.md); tools/hw_envelope.py measures
+the box's own ceiling.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,19 +29,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 200000
     pages_dir = sys.argv[2] if len(sys.argv) > 2 else f"/tmp/spark_graft_pages_{n_pages}"
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # body_scale 8 ≈ 5-10 KB pages — the Common-Crawl-ish size regime,
     # so per-page extraction is realistic work, not a 0.5 KB toy
     body_scale = int(os.environ.get("SPARK_GRAFT_BODY_SCALE", "8"))
 
-    from surfactant_spark.dictionary import alias_edges, compile_dictionary
-    from surfactant_spark.operators.canonicalize import entity_canonical_map
     from surfactant_spark.operators.extract import extract_pages
-    from surfactant_spark.operators.linking import build_edges
-    from surfactant_spark.operators.mentions import content_for_detection, detect_mentions
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.plans.catalog import SnapshotCatalog
+    from surfactant_spark.plans.pipeline import run_pipeline
+    from surfactant_spark.session import get_spark, host_cores
     from surfactant_spark.sources.pages import synth_pages
 
+    cores = host_cores()
     spark = get_spark(
         app_name=f"scale_probe_{cores}",
         cores=cores,
@@ -58,55 +59,13 @@ def main() -> None:
     extract_pages(pages.limit(64 * cores)).write.format("noop").mode("overwrite").save()
     pages.write.format("noop").mode("overwrite").save()  # heat page cache
 
-    compiled = compile_dictionary()
-    emap = entity_canonical_map(
-        spark, sorted({p.entity_key for p in compiled.patterns}), alias_edges()
-    ).cache()
-    emap.count()
-
-    # Table-level statistics — duplicate-rate estimate and hot-link-key
-    # sketch — are computed once per table snapshot in production (the
-    # ANALYZE TABLE pattern) and amortize across runs, so they sit
-    # outside the timed region.  Both are tiny sampled jobs.
-    from pyspark.sql import functions as F
-
-    from surfactant_spark.operators.mentions import unique_content
-    from surfactant_spark.operators.skew import find_hot_keys
-
-    from surfactant_spark.operators.mentions import CONTENT_DEDUP_THRESHOLD
-    from surfactant_spark.stats import column_stats, dup_rate
-
-    ext0 = extract_pages(pages).cache()
-    # full-column HLL sketch, not a row sample: sampling destroys
-    # duplicate structure and under-reads uniform low-k duplication
-    # (stats.column_stats docstring)
-    dedup_first = (
-        dup_rate(column_stats(ext0, "content_sha256")) >= CONTENT_DEDUP_THRESHOLD
-    )
-    links_flat = ext0.select(F.explode("links").alias("url"))
-    hot_keys = find_hot_keys(links_flat, "url")
-    ext0.unpersist()
-
     def one_run() -> float:
+        cat = tempfile.mkdtemp(prefix="scale_probe_catalog_")
         t0 = time.monotonic()
-        # stage boundary as compressed columnar cache, mirroring the
-        # pipeline's snapshot materialization (otherwise every edge
-        # family re-runs extraction).  cache() stores ~parquet-sized
-        # batches; a row-level localCheckpoint of multi-GB text blows
-        # the heap and measures GC instead of the engine.
-        ext = extract_pages(pages).cache()
-        ext.count()
-        content = unique_content(ext) if dedup_first else ext.select(
-            "content_sha256", "lang", "text"
-        )
-        mentions = detect_mentions(content, compiled)
-        edges = build_edges(
-            ext, mentions, emap, hot_link_keys=hot_keys,
-            mentions_unique=dedup_first,
-        )
-        edges.write.format("noop").mode("overwrite").save()
+        run_pipeline(spark, pages, SnapshotCatalog(cat),
+                     run_id=f"scale-{cores}", corpus_fingerprint=pages_dir)
         sec = time.monotonic() - t0
-        ext.unpersist()
+        shutil.rmtree(cat, ignore_errors=True)
         return sec
 
     # Run to JIT steady state: C2 compilation of the whole-stage-codegen
