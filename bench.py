@@ -3,7 +3,7 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the KG
 pipeline itself on a synthetic page corpus, plus a two-parallelism
-scaling probe (local[2] vs local[8] subprocesses by default) evidencing the
+scaling probe (local[N/4] vs local[N] subprocesses on N host cores) evidencing the
 north rule's N→4N scaling-efficiency criterion.
 
 Prints ONE JSON line:
@@ -23,6 +23,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from surfactant_spark.session import host_cores  # noqa: E402
 
 HEADLINE = [
     "tpch_q1_pricing",
@@ -164,8 +166,10 @@ def _run_once(fn) -> float:
 TRIALS = max(3, int(os.environ.get("SPARK_GRAFT_TRIALS", "3")))
 
 
-SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "2"))
-SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "8"))
+# N→4N on the cores this host gives us (local[1] vs local[4] on 4 cores):
+# every level must be pinnable, or the low level free-rides idle cores.
+SCALE_HI = int(os.environ.get("SPARK_GRAFT_SCALE_HI") or host_cores())
+SCALE_LO = int(os.environ.get("SPARK_GRAFT_SCALE_LO") or max(1, SCALE_HI // 4))
 # 3 interleaved rounds × (per-probe JIT-steady-state best-of-≤4), with
 # early stop once the ratio lands in the plausibility band — on a quiet
 # host this is 1 round; the third window exists because back-to-back
@@ -189,7 +193,7 @@ def _steal_jiffies() -> int:
 def run_scaling(repo: str) -> dict:
     """Same job (read pages table → ``run_pipeline`` on a fresh
     catalog, tools/scale_probe.py), two parallelism levels, N→4N
-    (default local[2] vs local[8]).
+    (default local[host_cores/4] vs local[host_cores]).
 
     Each probe is PINNED to exactly N cores (``taskset -c 0-(N-1)``).
     Without pinning, a local[2] JVM on a 32-core box free-rides its GC,
@@ -273,7 +277,7 @@ def main() -> None:
     from surfactant_spark import queries as q
     from surfactant_spark.plans.catalog import SnapshotCatalog
     from surfactant_spark.plans.pipeline import run_pipeline
-    from surfactant_spark.session import get_spark, host_cores
+    from surfactant_spark.session import get_spark
     from surfactant_spark.sources.pages import synth_pages
 
     cores = host_cores()

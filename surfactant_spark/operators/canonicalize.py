@@ -8,17 +8,24 @@ has two parts:
 1. page nodes — already canonical by construction: ``p:<content_sha256>``
    (groupBy on the hash, no iteration needed);
 2. dictionary entities — aliases form an arbitrary graph, so canonical
-   IDs need **connected components**.  Spark has no CC primitive; this
-   implements min-label propagation with pointer jumping (hash-to-min):
-   each iteration (a) takes the min label over the 2-hop neighborhood
-   (two chained propagate+min steps), (b) compresses paths by joining
-   labels onto themselves twice.  Converges in O(log n) iterations;
-   every iteration is checkpointed so lineage stays flat —
-   executor-local by default, or a reliable ``checkpoint`` when
-   ``checkpoint_dir`` points at cluster storage.  The convergence probe
-   is FUSED into each round's materializing action (lazy checkpoint +
-   full-scan changed-count agg): one Spark job per round, where r4 paid
-   an eager checkpoint plus a separate probe join.
+   IDs need **connected components**.  Two paths, one contract
+   (node → min member of its component):
+
+   * dictionaries: the alias edge list is already a Python list on the
+     driver, so ``entity_canonical_map`` runs ``union_find`` there and
+     ships one small Arrow frame — no Spark job before the stage write;
+   * corpus graphs (dedup clusters, link graphs): ``connected_components``
+     implements min-label propagation with pointer jumping
+     (hash-to-min): each iteration (a) takes the min label over the
+     2-hop neighborhood (two chained propagate+min steps), (b) compresses
+     paths by joining labels onto themselves twice.  Converges in
+     O(log n) iterations; every iteration is checkpointed so lineage
+     stays flat — executor-local by default, or a reliable
+     ``checkpoint`` when ``checkpoint_dir`` points at cluster storage.
+     The convergence probe is FUSED into each round's materializing
+     action (lazy checkpoint + full-scan changed-count agg): one Spark
+     job per round.  Graphs of at most ``SMALL_GRAPH_EDGES`` edges are
+     collected and answered by the same ``union_find``.
 
 Canonical ID election is deterministic: the minimum sha256 over the
 component's member keys (FIXTURES.md §4), the analog of Surfactant's
@@ -27,10 +34,15 @@ keep-the-first-UUID merge (surfactant/sbomtypes/_sbom.py:219-263).
 
 from __future__ import annotations
 
+import hashlib
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..schema import ENTITY_MAP_SCHEMA
+from ..session import local_frame
 
 
 def _round_checkpoint(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
@@ -56,6 +68,35 @@ def _round_checkpoint(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
 SMALL_GRAPH_EDGES = 100_000
 
 
+def union_find(pairs, nodes=()) -> dict:
+    """node → min member of its component, over the nodes of ``pairs``
+    plus ``nodes`` (singletons unless a pair joins them).  Self-pairs
+    add nothing, as in the distributed fixpoints.  Each union hangs the
+    larger root under the smaller, so every root is its component's
+    minimum."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in pairs:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {n: find(n) for n in parent}
+
+
 def _small_graph_labels(
     edges: DataFrame, src: str, dst: str, threshold: int
 ) -> DataFrame | None:
@@ -76,36 +117,12 @@ def _small_graph_labels(
     collected = pairs.limit(threshold + 1).collect()
     if len(collected) > threshold:
         return None
-    rows = [(r[0], r[1]) for r in collected
-            if r[0] is not None and r[1] is not None and r[0] != r[1]]
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in rows:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    comps: dict = {}
-    for a, b in rows:
-        comps.setdefault(find(a), set()).update((a, b))
-    out = []
-    for members in comps.values():
-        m = min(members)
-        out.extend((n, m) for n in sorted(members))
-    from pyspark.sql.types import StructField, StructType
-
+    comp = union_find(
+        (r[0], r[1]) for r in collected if r[0] is not None and r[1] is not None
+    )
     dt = pairs.schema.fields[0].dataType
     st = StructType([StructField("node", dt), StructField("component", dt)])
-    return edges.sparkSession.createDataFrame(out, st)
+    return local_frame(edges.sparkSession, list(comp.items()), st)
 
 
 def connected_components(
@@ -387,26 +404,16 @@ def entity_canonical_map(
     alias_edge_rows: list[tuple[str, str]],
 ) -> DataFrame:
     """→ (entity_key, canonical_id, member_keys) for every key in the
-    dictionary or the alias-edge graph.
+    dictionary or the alias-edge graph, built on the driver.
 
-    canonical_id = ``e:`` + min(sha256(member)) over the component.
-    """
-    edges = spark.createDataFrame(alias_edge_rows or [("_none_", "_none_")], ["a", "b"])
-    cc = connected_components(edges)
-    keys = spark.createDataFrame([(k,) for k in dict_keys], ["entity_key"])
-    all_nodes = (
-        cc.select(F.col("node").alias("entity_key"), "component")
-        .unionByName(
-            keys.join(cc, keys["entity_key"] == cc["node"], "left_anti").select(
-                "entity_key", F.col("entity_key").alias("component")
-            )
-        )
-        .where(F.col("entity_key") != "_none_")
-    )
-    comp_canon = all_nodes.groupBy("component").agg(
-        F.concat(F.lit("e:"), F.min(F.sha2(F.col("entity_key"), 256))).alias("canonical_id"),
-        F.sort_array(F.collect_set("entity_key")).alias("member_keys"),
-    )
-    return all_nodes.join(comp_canon, "component").select(
-        "entity_key", "canonical_id", "member_keys"
-    )
+    canonical_id = ``e:`` + min(sha256(member)) over the component — the
+    same hex Spark's ``sha2(key, 256)`` gives over UTF-8."""
+    comp = union_find(alias_edge_rows, dict_keys)
+    members: dict = {}
+    for key in sorted(comp):
+        members.setdefault(comp[key], []).append(key)
+    rows = []
+    for keys in members.values():
+        cid = "e:" + min(hashlib.sha256(k.encode()).hexdigest() for k in keys)
+        rows.extend((k, cid, keys) for k in keys)
+    return local_frame(spark, rows, ENTITY_MAP_SCHEMA)

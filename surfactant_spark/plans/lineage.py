@@ -22,6 +22,7 @@ from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import LINEAGE_SCHEMA
+from ..session import local_frame
 
 
 class _ListAccum(AccumulatorParam):
@@ -68,7 +69,4 @@ class LineageCollector:
         return list(self._acc.value)
 
     def to_df(self) -> DataFrame:
-        rows = self.rows()
-        if not rows:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        return local_frame(self.spark, self.rows(), LINEAGE_SCHEMA)

@@ -6,7 +6,7 @@ functions with materialized boundaries:
 
   stage 1 extract   pages → extracted           (narrow; Arrow UDF)
   stage 2 mentions  unique content → mentions   (broadcast dict, Arrow UDF)
-  stage 3 entity_map alias edges → canonical ids (union-find joins)
+  stage 3 entity_map alias edges → canonical ids (driver union-find)
   stage 4 nodes     groupBy-canonical merge     (shuffle)
   stage 5 edges     Uses/LinksTo/Contains joins (broadcast + skew-aware)
 

@@ -63,6 +63,15 @@ NODES_SCHEMA = T.StructType(
     ]
 )
 
+# Entity map: every dictionary or alias key → its component's canonical id.
+ENTITY_MAP_SCHEMA = T.StructType(
+    [
+        T.StructField("entity_key", T.StringType(), False),
+        T.StructField("canonical_id", T.StringType(), False),
+        T.StructField("member_keys", T.ArrayType(T.StringType(), False), False),
+    ]
+)
+
 EDGES_SCHEMA = T.StructType(
     [
         T.StructField("subj", T.StringType(), False),

@@ -8,7 +8,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def host_cores() -> int:
@@ -97,3 +98,17 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-sized ``rows`` as a one-partition DataFrame of exactly
+    ``schema``.  The rows cross to the JVM as one Arrow table, so no
+    Python worker runs, even with the Arrow conf off; a plain
+    ``createDataFrame(list)`` pickles them through a worker per task."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)

@@ -4,7 +4,13 @@ The distributed analog of Surfactant's dedup-merge canonical election
 
 import hashlib
 
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
 from surfactant_spark.operators.canonicalize import connected_components, entity_canonical_map
+from surfactant_spark.schema import ENTITY_MAP_SCHEMA
+from surfactant_spark.session import local_frame
 
 
 def _sha(s):
@@ -151,3 +157,74 @@ def test_small_graph_fast_path_parity(spark):
     got = {(r.node, r.component) for r in
            connected_components(iedges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1)}
+
+
+def _spark_entity_map(spark, dict_keys, edges):
+    """The distributed reference: fixpoint CC over the alias edges,
+    dictionary keys outside every edge as singletons, and the min
+    ``sha2`` over each component elected in Spark."""
+    cc = connected_components(
+        spark.createDataFrame(edges, "a string, b string"), small_threshold=0
+    )
+    keys = spark.createDataFrame([(k,) for k in dict_keys], "entity_key string")
+    nodes = cc.select(F.col("node").alias("entity_key"), "component").unionByName(
+        keys.join(cc, keys["entity_key"] == cc["node"], "left_anti").select(
+            "entity_key", F.col("entity_key").alias("component")
+        )
+    )
+    canon = nodes.groupBy("component").agg(
+        F.concat(F.lit("e:"), F.min(F.sha2("entity_key", 256))).alias("canonical_id"),
+        F.sort_array(F.collect_set("entity_key")).alias("member_keys"),
+    )
+    return nodes.join(canon, "component").select("entity_key", "canonical_id", "member_keys")
+
+
+_names = st.sampled_from([f"k{i}" for i in range(10)] + ["_none_", "Z", "ä", "日本"])
+
+
+@st.composite
+def _alias_graphs(draw):
+    """(dict_keys, edges): chains, stars and cliques, plus duplicate,
+    reversed and self edges; edge nodes outside ``dict_keys`` are
+    alias-only nodes."""
+    edges = []
+    for _ in range(draw(st.integers(0, 3))):
+        shape = draw(st.sampled_from(["chain", "star", "clique"]))
+        ns = draw(st.lists(_names, min_size=2, max_size=5, unique=True))
+        if shape == "chain":
+            edges += list(zip(ns, ns[1:]))
+        elif shape == "star":
+            edges += [(ns[0], n) for n in ns[1:]]
+        else:
+            edges += [(a, b) for i, a in enumerate(ns) for b in ns[i + 1:]]
+    if edges:
+        edges += draw(st.lists(st.sampled_from(edges), max_size=3))
+        edges += [(b, a) for a, b in draw(st.lists(st.sampled_from(edges), max_size=3))]
+    edges += [(n, n) for n in draw(st.lists(_names, max_size=2))]
+    dict_keys = draw(st.lists(_names, max_size=6, unique=True))
+    return dict_keys, edges
+
+
+@given(_alias_graphs())
+@example(([], []))
+@example((["k1", "solo"], []))
+@example((["k1", "k9"], [("k1", "k2"), ("k2", "k1"), ("k1", "k2"), ("k3", "k3"), ("ä", "k2")]))
+@settings(max_examples=12, deadline=None)
+def test_entity_map_matches_spark_reference(spark, graph):
+    dict_keys, edges = graph
+    got = entity_canonical_map(spark, dict_keys, edges)
+    assert got.schema == ENTITY_MAP_SCHEMA
+    want = _spark_entity_map(spark, dict_keys, edges)
+
+    def rows(df):
+        return sorted((r.entity_key, r.canonical_id, tuple(r.member_keys)) for r in df.collect())
+
+    assert rows(got) == rows(want)
+
+
+def test_local_frame_one_partition_exact_schema(spark):
+    for rows in ([], [("k", "e:" + _sha("k"), ["k"])]):
+        df = local_frame(spark, rows, ENTITY_MAP_SCHEMA)
+        assert df.rdd.getNumPartitions() == 1
+        assert df.schema == ENTITY_MAP_SCHEMA
+        assert [tuple(r) for r in df.collect()] == rows

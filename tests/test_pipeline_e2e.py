@@ -89,6 +89,32 @@ def test_lineage_rows_emitted(spark, pipeline_run):
     assert under == 0
 
 
+def _triples(res, preds):
+    return {(r.subj, r.pred, r.obj) for r in res.edges.collect() if r.pred in preds}
+
+
+def test_empty_dictionary_run(spark, tmp_path):
+    """An empty dictionary yields no Uses edges and leaves the
+    dictionary-free LinksTo/Contains edges as a default run has them."""
+    pages = synth_pages(spark, 20)
+    empty = run_pipeline(spark, pages, SnapshotCatalog(str(tmp_path / "empty")),
+                         corpus_fingerprint="synth-20", dict_rows=[])
+    default = run_pipeline(spark, pages, SnapshotCatalog(str(tmp_path / "default")),
+                           corpus_fingerprint="synth-20")
+    assert not _triples(empty, {"Uses"})
+    assert _triples(default, {"Uses"})
+    structural = {"LinksTo", "Contains"}
+    assert _triples(empty, structural) == _triples(default, structural)
+
+
+def test_dictionary_key_named_none_keeps_entity_map_row(spark, tmp_path):
+    catalog = SnapshotCatalog(str(tmp_path))
+    run_pipeline(spark, synth_pages(spark, 20), catalog, corpus_fingerprint="synth-20",
+                 dict_rows=[("_none_", "name", "_none_", None)], extra_alias_edges=[])
+    rows = catalog.read(spark, "entity_map").collect()
+    assert [(r.entity_key, list(r.member_keys)) for r in rows] == [("_none_", ["_none_"])]
+
+
 def test_expire_snapshots_keeps_committed_and_resume(spark, tmp_path):
     """Iceberg expire_snapshots analog: old snapshot dirs are removed,
     the committed one survives unconditionally, reads and resume work

@@ -14,6 +14,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -25,6 +26,8 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # audited on the non-AQE scan/filter query and aggregation structure
 # (two HashAggregates = map-side partial agg) on the AQE ones.
 # A "!needle" audit asserts the string is ABSENT (anti-pattern check).
+# A "<=N Node args" audit bounds the plan to at most N ``Node`` operators,
+# each with ``args`` in its Arguments line (e.g. one keyed Exchange).
 AUDITS = {
     "find_filter": ["PushedFilters", "* Filter"],
     "broadcast_join_agg": ["BroadcastHashJoin", "HashAggregate"],
@@ -87,7 +90,7 @@ AUDITS = {
     # narrower than the session parallelism — partitioning.spread), so
     # on the single-row-group audit fixture exactly one keyed Exchange
     # appears before the map projection; still no join anywhere.
-    "hashed_quality": ["!Join", "!CartesianProduct"],
+    "hashed_quality": ["<=1 Exchange hashpartitioning", "!Join", "!CartesianProduct"],
     # as-of join is union-tag-window: NO join operator of any kind
     "asof_join": ["Window", "!Join", "!CartesianProduct"],
     # binned range join: plain equi-join on the bin key — the naive
@@ -141,8 +144,8 @@ AUDITS = {
                    "!CartesianProduct"],
     # URL canonicalization / gopher rules: pure codegen projections
     # riding the scan (higher-order lambdas stay plain Project)
-    "url_canon": ["Project", "!Join"],
-    "gopher_quality": ["Project", "!Join"],
+    "url_canon": ["Project", "<=1 Exchange hashpartitioning", "!Join"],
+    "gopher_quality": ["Project", "<=1 Exchange hashpartitioning", "!Join"],
     # bm25: tf/df/dl partial aggs + term/doc equi-joins; top-k plans
     # as WindowGroupLimit (N and avgdl are driver literals, no
     # scalar-frame join in the plan)
@@ -341,8 +344,9 @@ AUDITS = {
     "shacl": ["HashAggregate", "!CartesianProduct",
               "!BroadcastNestedLoopJoin"],
     # content-defined chunking: pure array expressions riding the
-    # scan — posexplode only, no shuffle, no join
-    "cdc_chunks": ["Generate", "!Join"],
+    # scan — posexplode only, no join, no shuffle beyond the
+    # conditional spread
+    "cdc_chunks": ["Generate", "<=1 Exchange hashpartitioning", "!Join"],
     # HyperBall: per-round register join + partial-agg max groupBy;
     # state O(16|V|), never a cross join
     "hyperball": ["HashAggregate", "!CartesianProduct",
@@ -382,11 +386,18 @@ def plan_text(df) -> str:
     return buf.getvalue()
 
 
+def bounded(txt: str, limit: int, node: str, args: str) -> bool:
+    """At most ``limit`` ``node`` operators in the formatted plan, each
+    with ``args`` in its Arguments line."""
+    found = re.findall(rf"^\(\d+\) {node}\n(?:.*\n)*?Arguments: (.*)$", txt, re.M)
+    return len(found) <= limit and all(args in a for a in found)
+
+
 def main() -> None:
     from surfactant_spark import queries as q
-    from surfactant_spark.session import get_spark
+    from surfactant_spark.session import get_spark, host_cores
 
-    spark = get_spark(cores=8, shuffle_partitions=8)
+    spark = get_spark(cores=host_cores(), shuffle_partitions=8)
     registry = q.queries()
     names = [
         "find_filter", "broadcast_join_agg", "probe_path_join",
@@ -432,6 +443,10 @@ def main() -> None:
             if needle.startswith("!"):
                 ok = needle[1:] not in txt
                 label = f"absent `{needle[1:]}`"
+            elif needle.startswith("<="):
+                limit, node, args = needle[2:].split(" ", 2)
+                ok = bounded(txt, int(limit), node, args)
+                label = f"at most {limit} `{node} {args}`"
             else:
                 ok = needle in txt
                 label = f"`{needle}`"
